@@ -150,8 +150,8 @@ def main() -> None:
     extra["cold_bytes_per_point"] = round((stats[1] or 1) / max(stats[0] or 1, 1), 2)
 
     def stage_zstd():
-        # round 6: entropy-coded zstd encode+decode inside Spark tasks
-        # (the zarr/HDF5 sink path) — one ~128 KiB jsonl-ish chunk per task
+        # zstd encode+decode (libzstd via pyarrow) inside Spark tasks
+        # (the zarr/HDF5 sink path) — one ~128 KiB jsonl-ish chunk per row
         import pandas as pd
 
         from tsdat_spark.compress.zstd import zstd_compress, zstd_decompress

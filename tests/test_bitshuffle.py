@@ -117,12 +117,12 @@ def test_blosc_dont_split_flag_honored():
     ignores it mis-frames the streams."""
     from tsdat_spark.compress import bloscc
     from tsdat_spark.compress.bloscc import blosc_decompress
-    from tsdat_spark.compress.lz4block import lz4_compress
+    from pyarrow import Codec
 
     rng = np.random.RandomState(5)
     data = (rng.randint(0, 3, 2048) * 5).astype("<u4").tobytes()  # splittable shape
     shuf = bloscc._shuffle(data, 4)
-    comp = lz4_compress(shuf)
+    comp = Codec("lz4_raw").compress(shuf, asbytes=True)
     flags = bloscc.FLAG_SHUFFLE | bloscc.FLAG_DONT_SPLIT | (bloscc._CODEC_LZ4 << 5)
     body = struct.pack("<I", 20) + struct.pack("<i", len(comp)) + comp
     header = bloscc._HEADER.pack(2, 1, flags, 4, len(data), len(data), 16 + len(body))

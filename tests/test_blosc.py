@@ -1,6 +1,6 @@
-"""From-spec LZ4-block + blosc1 container codecs (compress/lz4block.py,
-compress/bloscc.py) — the codecs that let the zarr reader ingest
-blosc-compressed stores (the zarr-python default) without c-blosc.
+"""blosc1 container codec (compress/bloscc.py) over pyarrow's liblz4 —
+the codec that lets the zarr reader ingest blosc-compressed stores (the
+zarr-python default) without c-blosc.
 
 Golden anchor: the reference's own test fixture
 /root/reference/test/io/data/input.zarr (compressor blosc/lz4, shuffle=1)
@@ -14,16 +14,21 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from pyarrow import Codec
+
 from tsdat_spark.compress.bloscc import blosc_compress, blosc_decompress
-from tsdat_spark.compress.lz4block import lz4_compress, lz4_decompress
 
 REF_ZARR = "/root/reference/test/io/data/input.zarr"
 
 
-@given(st.binary(min_size=0, max_size=5000))
+_lz4 = Codec("lz4_raw")
+
+
+@given(st.binary(min_size=0, max_size=5000), st.sampled_from([1, 4, 8]))
 @settings(max_examples=200, deadline=None)
-def test_lz4_roundtrip_random(data):
-    assert lz4_decompress(lz4_compress(data), len(data)) == data
+def test_lz4_roundtrip_random(data, typesize):
+    data = data[: len(data) - len(data) % typesize]
+    assert blosc_decompress(blosc_compress(data, typesize)) == data
 
 
 @given(st.binary(min_size=1, max_size=64), st.integers(min_value=1, max_value=200))
@@ -31,18 +36,22 @@ def test_lz4_roundtrip_random(data):
 def test_lz4_roundtrip_repetitive(pattern, reps):
     """Repetitive data exercises real matches incl. overlapping copies."""
     data = pattern * reps
-    comp = lz4_compress(data)
-    assert lz4_decompress(comp, len(data)) == data
+    chunk = blosc_compress(data, 1)
+    assert blosc_decompress(chunk) == data
     if len(data) > 1000:
-        assert len(comp) < len(data)  # matches actually fire
+        assert len(chunk) < len(data)  # matches actually fire
 
 
 def test_lz4_known_vector():
-    """Hand-decoded vector: token 0x54 = 5 literals + match_len 8 (4+4),
-    offset 5 — 'abcde' then copy 8 bytes from 5 back = 'abcdeabc'; final
-    literal-only sequence '!'."""
-    src = bytes([0x54]) + b"abcde" + bytes([0x05, 0x00]) + bytes([0x10]) + b"!"
-    assert lz4_decompress(src, 14) == b"abcdeabcdeabc!"
+    """Hand-decoded LZ4 block: token 0x54 = 5 literals + match_len 8
+    (4+4), offset 5 — 'abcde' then copy 8 bytes from 5 back =
+    'abcdeabc'; the final literal-only sequence (token 0xC0) carries 12
+    '!' so the block ends the way the format requires: the last 5 bytes
+    are literals and the last match starts at least 12 bytes before the
+    end."""
+    src = bytes([0x54]) + b"abcde" + bytes([0x05, 0x00]) + bytes([0xC0]) + b"!" * 12
+    out = _lz4.decompress(src, decompressed_size=25, asbytes=True)
+    assert out == b"abcdeabcdeabc" + b"!" * 12
 
 
 @pytest.mark.parametrize("typesize,n", [(8, 64), (8, 2048), (4, 1000), (1, 300), (76, 12)])
@@ -85,7 +94,7 @@ def test_blosc_multiblock_leftover_tail_decodes():
         streams = b""
         for k in range(nsplits):
             seg = shuf[k * neblock : (k + 1) * neblock]
-            comp = lz4_compress(seg)
+            comp = _lz4.compress(seg, asbytes=True)
             if len(comp) >= len(seg):
                 streams += struct.pack("<i", len(seg)) + seg
             else:

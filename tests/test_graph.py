@@ -43,6 +43,18 @@ def test_components_nodes_missing_endpoint(spark):
     assert got == {1: 1, 2: 1, 9: 1, 3: 3}
 
 
+def test_components_int_nodes_bigint_edges(spark):
+    """An ``int`` node list with ``bigint`` edge endpoints: the isolated
+    nodes rejoin the propagated labels through a union, which must widen
+    both output columns to bigint and keep every label."""
+    edges = spark.createDataFrame([(1, 2), (2, 5), (7, 8)], "doc_a bigint, doc_b bigint")
+    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 5, 7, 8, 9)], "doc_id int")
+    out = connected_components(edges, nodes=nodes)
+    assert out.schema.simpleString() == "struct<node:bigint,cluster_id:bigint>"
+    got = {r["node"]: r["cluster_id"] for r in out.collect()}
+    assert got == {1: 1, 2: 1, 5: 1, 7: 7, 8: 7, 3: 3, 9: 9}
+
+
 def test_contraction_matches_propagation_on_mixed_graph(spark):
     from tsdat_spark.graph import connected_components_contraction
 

@@ -1,11 +1,10 @@
-"""From-spec RFC 8878 zstd decoder (compress/zstd.py) — golden-checked
-against pyarrow's bundled libzstd (the canonical implementation), which
-this image ships even though no standalone zstd binding exists.
+"""zstd decode (compress/zstd.py) of frames written by libzstd's one-shot
+API and by the zstd CLI: raw/RLE/compressed blocks, multi-block frames,
+every level's table choices, concatenated and skippable frames, frames
+without a content size, and the named errors (bad magic, truncation,
+dictionary frames)."""
 
-Coverage map: raw/RLE/compressed blocks, single- and 4-stream Huffman
-literals, direct AND FSE-compressed Huffman weights, predefined/RLE/
-FSE/repeat sequence tables, repeated offsets, multi-block frames,
-skippable frames, and the dictionary boundary."""
+import shutil
 
 import numpy as np
 import pytest
@@ -160,6 +159,35 @@ def test_hdf5_zstd_filter_applies():
     assert _apply_filters(_c(shuffled), [(2, (ts,)), (32015, ())], ts) == payload
 
 
+@pytest.mark.skipif(shutil.which("zstd") is None, reason="no zstd CLI on host")
+def test_frame_without_content_size_decodes(tmp_path):
+    """``zstd -c -`` reading stdin cannot know the input size, so its
+    frame has no Frame_Content_Size; it decodes directly and as a zarr v2
+    chunk."""
+    import json
+    import os
+    import subprocess
+
+    from tsdat_spark.io.zarr2 import read_zarr_array
+
+    data = (np.arange(3000, dtype="<i8") % 17).tobytes()
+    frame = subprocess.run(["zstd", "-q", "-c", "-"], input=data,
+                           check=True, capture_output=True).stdout
+    assert frame[4] & 0xC0 == 0 and not frame[4] & 0x20  # FCS field absent
+    assert zstd_decompress(frame) == data
+
+    adir = str(tmp_path / "nofcs" / "x")
+    os.makedirs(adir)
+    with open(os.path.join(adir, ".zarray"), "w") as f:
+        json.dump({"zarr_format": 2, "shape": [3000], "chunks": [3000],
+                   "dtype": "<i8", "compressor": {"id": "zstd", "level": 3},
+                   "fill_value": None, "filters": None, "order": "C"}, f)
+    with open(os.path.join(adir, "0"), "wb") as f:
+        f.write(frame)
+    np.testing.assert_array_equal(read_zarr_array(adir),
+                                  np.frombuffer(data, "<i8"))
+
+
 def test_dictionary_frame_boundary():
     """A frame declaring a dictionary id must raise the documented
     boundary error, not decode garbage."""
@@ -171,14 +199,14 @@ def test_dictionary_frame_boundary():
         zstd_decompress(frame + bytes([0x01, 0x00, 0x00]))
 
 
-# -- store-mode encoder (round 5) -------------------------------------------
+# -- encoder ------------------------------------------------------------------
 
 
 @pytest.mark.parametrize("name", sorted(CASES))
 def test_store_mode_encoder_accepted_by_libzstd(name):
-    """zstd_compress emits raw/RLE-block frames; the canonical libzstd
-    decoder (and our own) must accept every shape, including the empty
-    frame, multi-block >64 KiB payloads, and RLE runs."""
+    """Frames from zstd_compress carry their content size, so libzstd's
+    one-shot decoder (and zstd_decompress) accepts every shape, including
+    the empty frame, multi-block payloads, and RLE runs."""
     from tsdat_spark.compress.zstd import zstd_compress
 
     data = CASES[name]
@@ -192,7 +220,7 @@ def test_store_mode_rle_actually_shrinks():
 
     data = b"\x07" * 250_000
     frame = zstd_compress(data)
-    assert len(frame) < 100  # 4 RLE blocks + headers, not 250 KB
+    assert len(frame) < 100  # RLE blocks + headers, not 250 KB
     assert zstd_decompress(frame) == data
 
 

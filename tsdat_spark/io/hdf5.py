@@ -22,8 +22,8 @@ latest/_f_m_t3.html) that NetCDF-4 writers actually produce:
 - data layouts: compact, contiguous, v3 chunked (B-tree v1) and v4
   chunked (single-chunk and implicit index)
 - filter pipeline v1/v2: deflate (stdlib zlib), shuffle, fletcher32
-  (checksum stripped), zstd (filter 32015, from-spec ``compress/zstd``),
-  bitshuffle (filter 32008, plain or LZ4/zstd-framed, from-spec
+  (checksum stripped), zstd (filter 32015, libzstd via ``compress/zstd``),
+  bitshuffle (filter 32008, plain or LZ4/zstd-framed,
   ``compress/bitshuffle``); other filters raise with the filter id
 - global heap (``GCOL``) for VLEN attribute/dataset payloads
 
