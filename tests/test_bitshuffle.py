@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyarrow import Codec
 
 from tsdat_spark.compress.bitshuffle import (
     bitshuffle,
@@ -139,6 +140,15 @@ def test_hdf5_framing_roundtrip_multiblock_and_leftover():
     assert total == len(data) and block_bytes == 2048
     assert bshuf_decompress(framed, 4, 2) == data
     assert len(framed) < len(data)  # lz4 on bitshuffled low-entropy data wins
+
+
+def test_hdf5_framing_short_lz4_block_raises():
+    """A valid LZ4 block shorter than the framed block size must raise,
+    not come back padded with uninitialised bytes."""
+    comp = Codec("lz4_raw").compress(bytes(32), asbytes=True)  # 32 of 64 bytes
+    framed = struct.pack(">QI", 64, 64) + struct.pack(">I", len(comp)) + comp
+    with pytest.raises(ValueError, match="fewer than 64"):
+        bshuf_decompress(framed, 1, 2)
 
 
 def test_hdf5_framing_zstd_mode_decodes():

@@ -9,6 +9,8 @@ is interop evidence against the canonical implementation, covering the
 memcpyed path (index, First Data Var) and the compressed lz4+shuffle path
 (timestamp, typesize 76)."""
 
+import struct
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -52,6 +54,16 @@ def test_lz4_known_vector():
     src = bytes([0x54]) + b"abcde" + bytes([0x05, 0x00]) + bytes([0xC0]) + b"!" * 12
     out = _lz4.decompress(src, decompressed_size=25, asbytes=True)
     assert out == b"abcdeabcdeabc" + b"!" * 12
+
+
+def test_short_lz4_block_raises():
+    """A valid LZ4 block that decodes to fewer bytes than the chunk's
+    block size must raise, not come back padded to the block size."""
+    comp = _lz4.compress(bytes(150), asbytes=True)  # 150 of the 200 bytes
+    body = struct.pack("<I", 20) + struct.pack("<i", len(comp)) + comp
+    header = struct.pack("<BBBBIII", 2, 1, 1 << 5, 1, 200, 200, 16 + len(body))
+    with pytest.raises(ValueError, match="fewer than 200"):
+        blosc_decompress(header + body)
 
 
 @pytest.mark.parametrize("typesize,n", [(8, 64), (8, 2048), (4, 1000), (1, 300), (76, 12)])

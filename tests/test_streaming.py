@@ -209,7 +209,8 @@ def test_sessionize_stream_gap_on_batch_boundary(spark, tmp_path):
     )
     q.processAllAvailable()
     assert spark.sql("select count(*) from gap_sessions").first()[0] == 0
-    spark.createDataFrame(drop2, ddl).write.mode("append").parquet(src)
+    # one file, so the running query cannot pick up part of this drop
+    spark.createDataFrame(drop2, ddl).coalesce(1).write.mode("append").parquet(src)
     q.processAllAvailable()
     q.stop()
 

@@ -49,6 +49,27 @@ BLOCKED_MULT = 8  # BSHUF_BLOCKED_MULT: transposed element counts are 8-aligned
 _LZ4_RAW = pa.Codec("lz4_raw")
 
 
+def lz4_block_decompress(block: bytes, size: int) -> bytes:
+    """Decode one raw LZ4 block that must hold exactly ``size`` bytes.
+
+    pyarrow's ``lz4_raw`` returns a ``size``-byte buffer however few bytes
+    the block decodes to, leaving the rest uninitialised; a block that still
+    decodes into ``size - 1`` bytes is short and raises ``ValueError``, as
+    does a corrupt one.
+    """
+    try:
+        out = _LZ4_RAW.decompress(block, size, asbytes=True)
+    except OSError as e:
+        raise ValueError(f"corrupt LZ4 block: {e}") from e
+    if size:
+        try:
+            _LZ4_RAW.decompress(block, size - 1)
+        except OSError:
+            return out
+        raise ValueError(f"LZ4 block decodes to fewer than {size} bytes")
+    return out
+
+
 def default_block_size(elem_size: int) -> int:
     """bshuf_default_block_size: ~8 KiB of elements, 8-aligned, min 8."""
     bs = TARGET_BLOCK_BYTES // elem_size
@@ -197,7 +218,7 @@ def bshuf_decompress(payload: bytes, elem_size: int, compressor: int) -> bytes:
         comp = payload[pos : pos + clen]
         pos += clen
         if compressor == _COMP_LZ4:
-            shuf = _LZ4_RAW.decompress(comp, nb, asbytes=True)
+            shuf = lz4_block_decompress(comp, nb)
         elif compressor == _COMP_ZSTD:
             from .zstd import zstd_decompress
 

@@ -33,6 +33,8 @@ import struct
 import numpy as np
 import pyarrow as pa
 
+from .bitshuffle import blosc_bitshuffle, blosc_bitunshuffle, lz4_block_decompress
+
 _HEADER = struct.Struct("<BBBBIII")
 _LZ4_RAW = pa.Codec("lz4_raw")
 
@@ -117,7 +119,7 @@ def blosc_decompress(chunk: bytes) -> bytes:
             if csize == neblock:
                 block += payload  # stored raw
             elif codec == _CODEC_LZ4:
-                block += _LZ4_RAW.decompress(payload, neblock, asbytes=True)
+                block += lz4_block_decompress(payload, neblock)
             else:
                 raise NotImplementedError(
                     "compressed blosclz stream decoding not implemented"
@@ -125,8 +127,6 @@ def blosc_decompress(chunk: bytes) -> bytes:
         if flags & FLAG_SHUFFLE and typesize > 1:
             block = _unshuffle(bytes(block), typesize)
         elif flags & FLAG_BITSHUFFLE:
-            from .bitshuffle import blosc_bitunshuffle
-
             block = blosc_bitunshuffle(bytes(block), typesize)
         out += block
     if len(out) != nbytes:
@@ -164,8 +164,6 @@ def blosc_compress(
     flags = _CODEC_LZ4 << 5
     payload = data
     if shuffle in ("bit", 2):
-        from .bitshuffle import blosc_bitshuffle
-
         flags |= FLAG_BITSHUFFLE
         payload = blosc_bitshuffle(data, typesize)
     elif shuffle and typesize > 1:

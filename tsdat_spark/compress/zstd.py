@@ -11,10 +11,12 @@ from __future__ import annotations
 
 import pyarrow as pa
 
+_ZSTD = pa.Codec("zstd")
+
 
 def zstd_compress(data: bytes) -> bytes:
     """Encode ``data`` as one zstd frame at libzstd's default level."""
-    return pa.Codec("zstd").compress(data, asbytes=True)
+    return _ZSTD.compress(data, asbytes=True)
 
 
 def zstd_decompress(data: bytes) -> bytes:
